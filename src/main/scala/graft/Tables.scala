@@ -81,10 +81,30 @@ object Tables {
   * sized to cores (the driver harness overrides via SPARK_GRAFT_CPUS).
   */
 object GraftSession {
+  /** Entries in Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is LRU,
+    * and one perfbench warehouse pass cycles through ~137 distinct classes,
+    * so at 100 each warm pass recompiled 61–115 of them (1.1–1.6 s of a
+    * ~6.4 s pass). The full 278-query registry compiles ~3,600 distinct
+    * classes; a second registry pass in the same JVM recompiled 3,467 of
+    * them at 2,000 entries and ~400 per-run variants at 8192 or more. One
+    * entry holds 30–34 KB of heap (used heap after GC, before and after
+    * emptying the cache), so 8192 entries hold the registry's stable
+    * classes plus about ten passes' variants for at most ~280 MB, and only
+    * once full. Numbers: SCALING.md "Compiled-code reuse".
+    *
+    * Static conf: Spark sizes the cache once per JVM, when `CodeGenerator`
+    * is first used, from the `SQLConf` active at that moment. So it must be
+    * set here, and a GraftSession must exist before anything generates
+    * code; a JVM whose first codegen came from another session keeps 100.
+    */
+  val CodegenCacheEntries = 8192
+
   def builder(appName: String, cpus: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

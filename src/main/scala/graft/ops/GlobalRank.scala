@@ -28,8 +28,8 @@ object GlobalRank {
     */
   def withGlobalRank(df: DataFrame, sortCols: Seq[Column],
                      rankCol: String = "rank",
-                     maxWhenChain: Int = MaxWhenChainPartitions): DataFrame =
-    withGlobalRankTracked(df, sortCols, rankCol, maxWhenChain).df
+                     maxOffsetArray: Int = MaxOffsetArrayPartitions): DataFrame =
+    withGlobalRankTracked(df, sortCols, rankCol, maxOffsetArray).df
 
   /** Ranked frame plus `release()` for the internal checkpoint — call it
     * once the ranked frame has materialized downstream (the checkpoint's
@@ -38,7 +38,7 @@ object GlobalRank {
     */
   def withGlobalRankTracked(df: DataFrame, sortCols: Seq[Column],
                             rankCol: String = "rank",
-                            maxWhenChain: Int = MaxWhenChainPartitions): Checkpoints.Truncated = {
+                            maxOffsetArray: Int = MaxOffsetArrayPartitions): Checkpoints.Truncated = {
     import org.apache.spark.sql.functions._
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
     val tracked = Checkpoints.truncateTracked( // ids must be stable across the two uses
@@ -57,25 +57,21 @@ object GlobalRank {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val offsets = counts.scanLeft(0L) { case (acc, (_, c)) => acc + c }
     val localRank = col("_mid") - shiftleft(col("_pid").cast("long"), 33) + 1
+    val pairs = counts.map(_._1).zip(offsets)
     val ranked =
-      if (counts.length <= maxWhenChain) {
-        // small partition counts: a when-chain literal keeps the whole rank
+      if (pidBound(pairs) <= maxOffsetArray) {
+        // small partition counts: an array lookup keeps the whole rank
         // expression inside codegen (no join at all)
-        val offsetMap = counts.map(_._1).zip(offsets).toMap
-        val offsetCol = counts.foldLeft(lit(0L)) { case (acc, (pid, _)) =>
-          when(col("_pid") === pid, lit(offsetMap(pid))).otherwise(acc)
-        }
-        sorted.withColumn(rankCol, offsetCol + localRank)
+        sorted.withColumn(rankCol, offsetByPid(pairs) + localRank)
       } else {
-        // large partition counts: a when-chain would blow up codegen
-        // (O(partitions) nested CASE); broadcast-join the tiny offsets
-        // table instead. Correctness does not depend on the join strategy
-        // or row order: ranks are pure functions of the materialized
-        // _mid/_pid columns, so any physical plan yields the same ranks
+        // large partition counts: the offsets array would ride in every
+        // task's closure; broadcast-join the tiny offsets table instead.
+        // Correctness does not depend on the join strategy or row order:
+        // ranks are pure functions of the materialized _mid/_pid columns,
+        // so any physical plan yields the same ranks
         val spark = df.sparkSession
         import spark.implicits._
-        val offsetsDf = broadcast(
-          counts.map(_._1).zip(offsets).toSeq.toDF("_pid", "_offset"))
+        val offsetsDf = broadcast(pairs.toSeq.toDF("_pid", "_offset"))
         sorted.join(offsetsDf, "_pid")
           .withColumn(rankCol, col("_offset") + localRank)
           .drop("_offset")
@@ -84,17 +80,35 @@ object GlobalRank {
   }
 
   /** Above this many partitions the rank offsets ride a broadcast join
-    * instead of a codegen'd when-chain.
+    * instead of an array literal in the generated code.
     */
-  val MaxWhenChainPartitions: Int = 256
+  val MaxOffsetArrayPartitions: Int = 256
+
+  /** One past the highest partition id in `pairs` (sorted by id). */
+  private def pidBound(pairs: Array[(Int, Long)]): Int =
+    pairs.lastOption.fold(0)(_._1 + 1)
+
+  /** `_pid`'s start offset, looked up in an array literal indexed by
+    * partition id. The offsets come from sampled range bounds, so they
+    * change from run to run. Spark inlines a long literal into generated
+    * code but passes an array literal by reference, so this keeps the
+    * generated class the same on every run and it is compiled once per
+    * JVM (see GraftSession.CodegenCacheEntries).
+    */
+  private def offsetByPid(pairs: Array[(Int, Long)]): Column = {
+    import org.apache.spark.sql.functions._
+    val byPid = new Array[Long](pidBound(pairs))
+    pairs.foreach { case (pid, off) => byPid(pid) = off }
+    element_at(typedLit(byPid), col("_pid") + 1)
+  }
 
   /** [[withGlobalCumSumTracked]] without the release handle — same
     * session-hygiene caveat as [[withGlobalRank]].
     */
   def withGlobalCumSum(df: DataFrame, sortCols: Seq[Column], weightCol: String,
                        cumCol: String = "cum_start",
-                       maxWhenChain: Int = MaxWhenChainPartitions): DataFrame =
-    withGlobalCumSumTracked(df, sortCols, weightCol, cumCol, maxWhenChain).df
+                       maxOffsetArray: Int = MaxOffsetArrayPartitions): DataFrame =
+    withGlobalCumSumTracked(df, sortCols, weightCol, cumCol, maxOffsetArray).df
 
   /** Distributed EXCLUSIVE prefix sum of `weightCol` over the global
     * `sortCols` order: each row gets the total weight of all rows
@@ -113,7 +127,7 @@ object GlobalRank {
     */
   def withGlobalCumSumTracked(df: DataFrame, sortCols: Seq[Column], weightCol: String,
                               cumCol: String = "cum_start",
-                              maxWhenChain: Int = MaxWhenChainPartitions): Checkpoints.Truncated = {
+                              maxOffsetArray: Int = MaxOffsetArrayPartitions): Checkpoints.Truncated = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
@@ -134,11 +148,8 @@ object GlobalRank {
     val local = coalesce(sum(w).over(win), lit(0L))
     val pairs = sums.map(_._1).zip(offsets)
     val result =
-      if (sums.length <= maxWhenChain) {
-        val offsetCol = pairs.foldLeft(lit(0L)) { case (acc, (pid, off)) =>
-          when(col("_pid") === pid, lit(off)).otherwise(acc)
-        }
-        sorted.withColumn(cumCol, offsetCol + local)
+      if (pidBound(pairs) <= maxOffsetArray) {
+        sorted.withColumn(cumCol, offsetByPid(pairs) + local)
       } else {
         val spark = df.sparkSession
         import spark.implicits._

@@ -21,15 +21,15 @@ class GlobalRankSpec extends SparkSpec {
     assert(dist == window)
   }
 
-  test("broadcast-offset path (forced) matches the when-chain path") {
+  test("broadcast-offset path (forced) matches the offset-array path") {
     val li = graft.Tables.load(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"))
     val cols = Seq(col("l_orderkey").asc, col("l_linenumber").asc)
-    val chain = GlobalRank.withGlobalRank(li, cols)
+    val arr = GlobalRank.withGlobalRank(li, cols)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val bcast = GlobalRank.withGlobalRank(li, cols, maxWhenChain = 0)
+    val bcast = GlobalRank.withGlobalRank(li, cols, maxOffsetArray = 0)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    assert(bcast == chain)
+    assert(bcast == arr)
   }
 
   test("2000-partition rank takes the broadcast path and stays correct") {
